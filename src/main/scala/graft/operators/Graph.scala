@@ -11,35 +11,27 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-point PageRank over an edge list, in scaled INTEGER
-    * arithmetic: ranks are maintained as `rank * scale` longs and
-    * every per-edge contribution is the floor division
-    * `(dampNum * r(u)) div (dampDen * outdeg(u))`, so each
-    * iteration is exact integer arithmetic end-to-end — sums are
-    * order-independent, results are identical on any engine that
-    * replays the recurrence (q60's DuckDB oracle unrolls it in
-    * SQL), and no float summation ever enters the loop. The
-    * float-rank formulation would tie the result to Spark's
-    * nondeterministic aggregation order; the classic
-    * fixed-point-arithmetic trade accepts ~1/scale rounding per
-    * edge for bit-reproducibility.
-    *
-    * Semantics: nodes = distinct endpoints; initial rank
-    * `scale div N`; per iteration
-    * `r'(v) = base + sum over in-edges of contrib(u, v)` with
-    * `base = ((dampDen - dampNum) * scale) div (dampDen * N)`.
-    * Dangling nodes (no out-edges) leak their damped mass — the
-    * simple-variant convention, documented rather than
-    * redistributed; ranks are relative ordering scores, not a
-    * probability simplex.
-    *
-    * Scale shape: the out-degree join is precomputed once onto the
-    * edge list (static across iterations); each iteration is one
-    * equi-join of the rank table onto that edge list (shuffle on
-    * src) plus one map-side-combinable aggregation (shuffle on dst)
-    * — the canonical distributed PageRank step. Rank state is
-    * localCheckpoint'd per round: without the cut the logical plan
-    * doubles every iteration (the q47 lesson). */
+  /** The canonical undirected projection every undirected operator
+    * here starts from: endpoints as longs `(u, v) = (least, greatest)`,
+    * self-loops dropped. `least`/`greatest` skip a null endpoint, so
+    * a half-null row becomes a self-loop and leaves with them, and the
+    * projection never yields a null. */
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+
+  /** Canonical undirected edge set `(u < v)`, deduped and
+    * MATERIALIZED (localCheckpoint): the declarative plans' starting
+    * frame. Factored out so [[kHopReachAuto]] can canonicalize ONCE
+    * and hand the same materialized frame to the probe and whichever
+    * branch it routes to — the r12 q183 artifact paid this synthesis
+    * twice (probe + branch) plus the branch's own
+    * re-canonicalization. */
+  private def canonicalUndirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    canonicalPairs(edges, srcCol, dstCol).distinct().localCheckpoint(true)
+
   /** Exact triangle census with local clustering coefficients — the
     * third member of the graph tier (q60 ranks, q47 resolves
     * components, this measures cohesion: community density of a link
@@ -73,32 +65,18 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
                     maxKernelEdges: Int = 4000000): DataFrame = {
-    val pairs = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    // Size-routed strategy (r18, the q31/q217 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the census runs as ONE
-    // broadcast-CSR kernel; above the bound, the declarative
-    // edge-intersection plan (the 100 TB shape) runs unchanged.
-    // Probe and collect are ONE bounded execution (r19, r18 advisor):
-    // `limit(n+1).collect()` short-circuits the scan once n+1 rows are
-    // gathered, so at most maxKernelEdges+1 rows ever reach the driver
-    // — the guard holds even for a non-deterministic source whose
-    // separate probe count would disagree with a second collect run,
-    // and the over-bound route no longer pays a full extra pass. The
-    // exact dedup happens in dense-id space on the guard-admitted
-    // driver array ([[densePairs]], one primitive sort). raw ≥
-    // distinct, so the bound still caps what reaches the driver; a
-    // duplicate-heavy graph routes conservatively to the declarative
-    // plan, whose own distinct handles it at any scale (its distinct
-    // exchanges dedup via ReusedExchange inside the one oriented-list
-    // checkpoint job — the r16 probe measured checkpointing ue as
-    // well SLOWER, o-only 1.35 s vs all-three 1.85 s).
-    val probed = pairs.limit(maxKernelEdges + 1).collect()
-    if (probed.length <= maxKernelEdges)
-      triangleCountKernel(edges.sparkSession, probed)
-    else triangleCountViaJoins(pairs.distinct())
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
+    // Size-routed strategy (r18, the q31/q217 convention; the route
+    // is [[DriverFold]]): up to `maxKernelEdges` RAW canonical pairs
+    // the census runs as ONE broadcast-CSR kernel; above the bound,
+    // the declarative edge-intersection plan (the 100 TB shape) runs
+    // unchanged, its own distinct handling duplicates at any scale
+    // (the distinct exchanges dedup via ReusedExchange inside the one
+    // oriented-list checkpoint job).
+    DriverFold.edges(pairs, maxKernelEdges, dropDup = true) match {
+      case Some(g) => triangleCountKernel(edges.sparkSession, g)
+      case None => triangleCountViaJoins(pairs.distinct())
+    }
   }
 
   /** The declarative edge-intersection census over canonical
@@ -112,9 +90,10 @@ object Graph {
     // (adjacency build, both intersection joins) would otherwise
     // re-execute the whole scan→distinct→degree→orient pipeline each
     // (r16 probe: 35 exchanges, ~5 recomputations). Checkpointing ue
-    // and deg as well was measured SLOWER — their recomputation is
-    // two cheap scans, less than two extra materialization jobs
-    // (Q105Probe variants: o-only 1.35 s vs all-three 1.85 s min).
+    // and deg as well was measured SLOWER in r16 — their
+    // recomputation is two cheap scans, less than two extra
+    // materialization jobs (o-only 1.35 s vs all-three 1.85 s min;
+    // the shipped plan is plans/r18/q105_triangle_count_before.txt).
     val deg = ue.select(col("u").as("node")).union(ue.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // Attach both endpoint degrees, then orient by (deg, node).
@@ -164,52 +143,8 @@ object Graph {
             (col("deg") * (col("deg") - 1L)).cast("double")))
   }
 
-  /** Dense-id mapping + exact dedup of RAW canonical (u,v) pairs,
-    * driver-side (r18 opt pass): the node universe sorts into a dense
-    * index, each pair encodes as one long `(denseU << 32) | denseV`
-    * (dense ids are < 2³¹ by the routing guard), and one primitive
-    * `Arrays.sort` + unique-scan removes duplicates — no boxing, no
-    * per-pair allocation, O(m log m). Shared by both broadcast-CSR
-    * kernels so the routing probe can count RAW rows (exchange-free
-    * scan) instead of paying a distinct shuffle before the guard. */
-  private def densePairs(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Long], Array[Int], Array[Int]) = {
-    val nodeSet = new java.util.TreeSet[java.lang.Long]()
-    rows.foreach { r => nodeSet.add(r.getLong(0)); nodeSet.add(r.getLong(1)) }
-    val nodes = new Array[Long](nodeSet.size())
-    locally {
-      var i = 0; val it = nodeSet.iterator()
-      while (it.hasNext) { nodes(i) = it.next(); i += 1 }
-    }
-    def dense(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val enc = new Array[Long](rows.length)
-    locally {
-      var i = 0
-      while (i < rows.length) {
-        enc(i) = (dense(rows(i).getLong(0)).toLong << 32) |
-          (dense(rows(i).getLong(1)).toLong & 0xffffffffL)
-        i += 1
-      }
-    }
-    java.util.Arrays.sort(enc)
-    var m = 0
-    locally {
-      var i = 0
-      while (i < enc.length) {
-        if (i == 0 || enc(i) != enc(i - 1)) { enc(m) = enc(i); m += 1 }
-        i += 1
-      }
-    }
-    val eu = new Array[Int](m); val ev = new Array[Int](m)
-    locally {
-      var i = 0
-      while (i < m) { eu(i) = (enc(i) >>> 32).toInt; ev(i) = enc(i).toInt; i += 1 }
-    }
-    (nodes, eu, ev)
-  }
-
   /** Broadcast-CSR triangle kernel (r18): the collected canonical
-    * pair list (raw; [[densePairs]] dedups exactly) becomes a
+    * pair list (deduped exactly by [[DriverFold.edges]]) becomes a
     * degree-oriented compressed adjacency on the driver (dense ids,
     * per-list sort — the same Chiba–Nishizeki orientation as the join
     * plan), broadcast once, and the edge-by-edge sorted-merge
@@ -221,9 +156,8 @@ object Graph {
     * identical to the join plan row-for-row (spec-pinned
     * differentially). */
   private def triangleCountKernel(spark: org.apache.spark.sql.SparkSession,
-                                  rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
+                                  g: DriverFold.Dense): DataFrame = {
+    val DriverFold.Dense(nodes, eu, ev) = g
     val n = nodes.length
     val m = eu.length
     val degArr = new Array[Int](n)
@@ -258,7 +192,7 @@ object Graph {
       var v = 0
       while (v < n) { java.util.Arrays.sort(adj, ptr(v), ptr(v + 1)); v += 1 }
     }
-    val bc = spark.sparkContext.broadcast((nodes, degArr, ptr, adj, ex, ey))
+    val bc = spark.sparkContext.broadcast((ptr, adj, ex, ey))
     val parts = spark.sparkContext.defaultParallelism.max(1)
     // Edge-range tasks: each intersects its slice's out-lists against
     // the broadcast CSR into one dense long[] of node width, and the
@@ -268,13 +202,12 @@ object Graph {
     // array is ≤ 8·n bytes, strictly smaller than the edge list the
     // guard already admitted to the driver, and cutting the
     // aggregate+join tail removes three AQE shuffle jobs from a
-    // sub-second census (r18 opt pass: 10 → ~5 jobs; the emit below
-    // is the labelPropKernel broadcast+range convention, never a
-    // driver-built frame).
+    // sub-second census (r18 opt pass: 10 → ~5 jobs; the emit is
+    // [[DriverFold.perNode]]).
     val counts: Array[Long] = spark.sparkContext
       .range(0L, parts.toLong, 1L, parts)
       .mapPartitions { ps =>
-        val (_, _, bPtr, bAdj, bEx, bEy) = bc.value
+        val (bPtr, bAdj, bEx, bEy) = bc.value
         val mm = bEx.length
         val cnt = new Array[Long](bPtr.length - 1)
         ps.foreach { p =>
@@ -311,11 +244,8 @@ object Graph {
         while (i < a.length) { a(i) += b(i); i += 1 }
         a
       }, depth = 2)
-    val bcCnt = spark.sparkContext.broadcast(counts)
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bNodes, bDeg, _, _, _, _) = bc.value
-      (bNodes(i.toInt), bDeg(i.toInt).toLong, bcCnt.value(i.toInt))
-    }.toDF("node", "deg", "n_tri")
+    DriverFold.perNode(spark, "node" -> nodes, "deg" -> degArr.map(_.toLong),
+        "n_tri" -> counts)
       .withColumn("clust",
         when(col("deg") >= 2,
           (col("n_tri") * 2L).cast("double") /
@@ -342,12 +272,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, "k >= 1 and rounds >= 0")
-    var cur = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    var cur = canonicalUndirected(edges, srcCol, dstCol)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).union(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -370,12 +295,7 @@ object Graph {
     * differentially on random graphs). */
   def kCoreFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, maxRounds: Int = 1000): DataFrame = {
-    var cur = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    var cur = canonicalUndirected(edges, srcCol, dstCol)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).union(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -423,47 +343,47 @@ object Graph {
     * hop so the plan stays flat (the accumulated set is a union of
     * already-materialized checkpoints and needs no re-materialize).
     * Self-pairs are excluded throughout. */
-  /** Canonical undirected edge set `(u < v)`, deduped and
-    * MATERIALIZED (localCheckpoint): the one frame every graph
-    * operator here starts from. Factored out so [[kHopReachAuto]]
-    * can canonicalize ONCE and hand the same materialized frame to
-    * the probe and whichever branch it routes to — the r12 q183
-    * artifact paid this synthesis twice (probe + branch) plus the
-    * branch's own re-canonicalization. */
-  private[graft] def canonicalUndirected(edges: DataFrame, srcCol: String,
-                                         dstCol: String): DataFrame =
-    edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-
   def kHopReach(edges: DataFrame, srcCol: String, dstCol: String,
                 k: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    // Size-routed strategy (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the census runs as ONE
-    // broadcast-CSR kernel — per-node depth-bounded BFS in executor
-    // tasks, with none of the per-hop join/distinct/anti-join
-    // machinery around it (at toy SF those per-hop jobs ARE the
-    // cost). Probe and collect are one bounded `limit(n+1).collect()`
-    // execution (the r18-advisor discipline): at most n+1 rows ever
-    // reach the driver, and the scan short-circuits over the bound.
-    // densePairs dedups exactly in dense-id space, so the kernel
-    // skips the canonical distinct+checkpoint entirely. Above the
-    // bound the declarative semi-naive frontier plan (the 100 TB
-    // shape) runs unchanged.
-    if (maxKernelEdges > 0) {
-      val pairs = edges
-        .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-      val probed = pairs.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges)
-        return kHopReachKernel(edges.sparkSession, probed, k)
+    // Size-routed strategy (r19, the q105/q118 convention, through
+    // [[DriverFold]]): up to `maxKernelEdges` RAW canonical pairs the
+    // census runs as ONE broadcast-CSR kernel — per-node depth-bounded
+    // BFS in executor tasks, with none of the per-hop
+    // join/distinct/anti-join machinery around it (at toy SF those
+    // per-hop jobs ARE the cost). The dense index dedups exactly, so
+    // the kernel skips the canonical distinct+checkpoint entirely.
+    // Above the bound the declarative semi-naive frontier plan (the
+    // 100 TB shape) runs unchanged.
+    DriverFold.edges(canonicalPairs(edges, srcCol, dstCol), maxKernelEdges, dropDup = true) match {
+      case Some(g) => kHopReachKernel(edges.sparkSession, g, k)
+      case None => kHopReachCanonical(canonicalUndirected(edges, srcCol, dstCol), k)
     }
-    kHopReachCanonical(canonicalUndirected(edges, srcCol, dstCol), k)
+  }
+
+  /** Symmetric compressed adjacency of a deduped dense edge list:
+    * node v's neighbors are `adj(ptr(v) until ptr(v + 1))`, each edge
+    * listed from both ends. Shared by the BFS and label kernels. */
+  private def symmetricCsr(g: DriverFold.Dense): (Array[Int], Array[Int]) = {
+    val DriverFold.Dense(nodes, eu, ev) = g
+    val n = nodes.length
+    val m = eu.length
+    val deg = new Array[Int](n)
+    locally {
+      var i = 0
+      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
+    }
+    val ptr = new Array[Int](n + 1)
+    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
+    val adj = new Array[Int](2 * m)
+    val fill = java.util.Arrays.copyOf(ptr, n)
+    var i = 0
+    while (i < m) {
+      adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
+      adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
+      i += 1
+    }
+    (ptr, adj)
   }
 
   /** Broadcast-CSR k-hop reach kernel: EXACTLY the declarative
@@ -476,30 +396,11 @@ object Graph {
     * guard-bounded like the triangle kernel's long[]); the stamp
     * trick avoids clearing them between BFS runs. */
   private def kHopReachKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              k: Int): DataFrame = {
+                              g: DriverFold.Dense, k: Int): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val m = eu.length
-    val deg = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-    }
-    val ptr = new Array[Int](n + 1)
-    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
-    val adj = new Array[Int](2 * m)
-    locally {
-      val fill = java.util.Arrays.copyOf(ptr, n)
-      var i = 0
-      while (i < m) {
-        adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
-        adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
-        i += 1
-      }
-    }
-    val bc = spark.sparkContext.broadcast((nodes, ptr, adj))
+    val (ptr, adj) = symmetricCsr(g)
+    val n = g.nodes.length
+    val bc = spark.sparkContext.broadcast((g.nodes, ptr, adj))
     val kk = k
     spark.range(0, n.toLong).as[Long].mapPartitions { it =>
       val (bNodes, bPtr, bAdj) = bc.value
@@ -541,8 +442,7 @@ object Graph {
 
   /** [[kHopReach]] over an already-canonical, already-materialized
     * `(u, v)` edge frame (see [[canonicalUndirected]]). */
-  private[graft] def kHopReachCanonical(ue: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, "k must be >= 1")
+  private def kHopReachCanonical(ue: DataFrame, k: Int): DataFrame = {
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
     // Pre-spread the frontier side of the hop join: a small adjacency
@@ -594,9 +494,10 @@ object Graph {
     * applied to the one graph op whose exact path materializes
     * Σ|B_k(u)| pair rows (quadratic-ish on dense graphs). The edge
     * set is canonicalized and MATERIALIZED once up front (both
-    * branches need exactly that frame anyway), the probe is a
-    * bounded `limit(n+1).count()` on the materialized frame (no
-    * upstream re-execution), and the routed branch consumes the
+    * branches need exactly that frame anyway), the probe is one
+    * bounded read of the materialized frame (a [[DriverFold]]
+    * collect up to the 4M kernel bound, a `limit(n+1).count()` above
+    * it; no upstream re-execution), and the routed branch consumes the
     * same frame — so the synthesis lineage above the operator runs
     * exactly once regardless of route.
     *
@@ -615,44 +516,40 @@ object Graph {
   def kHopReachAuto(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, p: Int = 6,
                     maxExactEdges: Long = 1L << 20): DataFrame = {
+    requireBall(k, p)
     // Canonicalize ONCE: both branches start from the same distinct
     // (u, v) set and materialize it anyway, so probing the raw input
     // lineage separately just re-ran the upstream synthesis (the r12
-    // q183 artifact paid the pipeline roughly twice). The probe is a
-    // bounded count on the MATERIALIZED frame — no job re-runs — and
-    // the routed branch consumes the very same frame. The bound is
-    // thereby interpreted over canonical undirected edges (dups and
-    // self-loops no longer count toward it), which is the quantity
-    // the exact path's pair-set cost actually scales with.
+    // q183 artifact paid the pipeline roughly twice). The probe reads
+    // the MATERIALIZED frame — no job re-runs — and the routed branch
+    // consumes the very same frame. The bound is thereby interpreted
+    // over canonical undirected edges (dups and self-loops no longer
+    // count toward it), which is the quantity the exact path's
+    // pair-set cost actually scales with.
     val ue = canonicalUndirected(edges, srcCol, dstCol)
-    val probe = math.min(maxExactEdges + 1, Int.MaxValue.toLong).toInt
-    // Bounded limit-collect (r19): when the admitted exact frame also
-    // fits the broadcast-CSR kernel bound, the probe IS the collect —
-    // one execution, ≤ probe rows on the driver (ue is materialized,
-    // so the rows are the complete canonical set whenever fewer than
-    // `probe` come back). Above the kernel bound the exact branch
-    // stays declarative, probed by the bounded count as before.
+    def estimate(est: DataFrame): DataFrame = est.select(col("node"),
+      floor(col("ball_estimate") - lit(0.5)).cast("long").as("n_reach"))
     if (maxExactEdges <= 4000000L) {
-      // Collect up to the LARGER of the exact bound and the HyperBall
-      // kernel bound, so one bounded execution decides (and feeds)
-      // whichever kernel the size admits — the r18-advisor discipline
-      // with no second probe job on the routed branch.
-      val lim = math.max(probe.toLong, HyperBallKernelBound.toLong + 1L).toInt
-      val probed = ue.limit(lim).collect()
-      if (probed.length <= maxExactEdges)
-        return kHopReachKernel(edges.sparkSession, probed, k)
-      val est =
-        if (probed.length <= HyperBallKernelBound && hyperBallKernelFits(probed.length, p))
-          hyperBallKernel(edges.sparkSession, probed, k, p)
-        else hyperBallCanonical(ue, k, p, maxKernelEdges = 0)
-      est.select(col("node"),
-        floor(col("ball_estimate") - lit(0.5)).cast("long").as("n_reach"))
+      // One [[DriverFold]] probe-collect up to the LARGER of the exact
+      // bound and the HyperBall kernel bound decides (and feeds)
+      // whichever kernel the size admits, with no second probe job on
+      // the routed branch. Admitted rows are the complete canonical
+      // set, since ue is materialized.
+      val bound = math.max(maxExactEdges, HyperBallKernelBound.toLong).toInt
+      DriverFold.edges(ue, bound, dropDup = true) match {
+        case Some(g) if g.eu.length <= maxExactEdges =>
+          kHopReachKernel(edges.sparkSession, g, k)
+        case Some(g) if hyperBallKernelFits(g.eu.length, p) =>
+          estimate(hyperBallKernel(edges.sparkSession, g, k, p))
+        case _ => estimate(hyperBallCanonical(ue, k, p))
+      }
     } else {
-      val small = ue.limit(probe).count() <= maxExactEdges
-      if (small) kHopReachCanonical(ue, k)
-      else hyperBallCanonical(ue, k, p)
-        .select(col("node"),
-          floor(col("ball_estimate") - lit(0.5)).cast("long").as("n_reach"))
+      // Above the kernel bound the exact branch stays declarative,
+      // probed by a bounded count; the HyperBall branch's input is then
+      // over 4M edges, beyond any kernel bound, so it is declarative too.
+      val probe = math.min(maxExactEdges + 1, Int.MaxValue.toLong).toInt
+      if (ue.limit(probe).count() <= maxExactEdges) kHopReachCanonical(ue, k)
+      else estimate(hyperBallCanonical(ue, k, p))
     }
   }
 
@@ -679,27 +576,27 @@ object Graph {
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
                 k: Int, p: Int = 6,
                 maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the register evolution
-    // runs as one driver-fold kernel over a dense byte matrix —
-    // probe and collect are one bounded `limit(n+1).collect()`
-    // execution, densePairs dedups exactly, and the kernel skips the
-    // canonical distinct+checkpoint plus the k (join + udaf-agg +
-    // checkpoint) rounds entirely. Above the bound the declarative
-    // packed-register plan (the 100 TB shape) runs unchanged —
-    // routed conservatively, since raw ≥ distinct.
-    if (maxKernelEdges > 0) {
-      val pairs = edges
-        .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-      val probed = pairs.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))
-        return hyperBallKernel(edges.sparkSession, probed, k, p)
+    requireBall(k, p)
+    // Size-routed (r19, the q105/q118 convention, through
+    // [[DriverFold]]): up to `maxKernelEdges` RAW canonical pairs the
+    // register evolution runs as one driver-fold kernel over a dense
+    // byte matrix, skipping the canonical distinct+checkpoint plus the
+    // k (join + udaf-agg + checkpoint) rounds entirely. Above the
+    // bound, or when the matrix would not fit, the declarative
+    // packed-register plan (the 100 TB shape) runs unchanged.
+    DriverFold.edges(canonicalPairs(edges, srcCol, dstCol), maxKernelEdges, dropDup = true)
+      .filter(g => hyperBallKernelFits(g.eu.length, p)) match {
+      case Some(g) => hyperBallKernel(edges.sparkSession, g, k, p)
+      case None => hyperBallCanonical(canonicalUndirected(edges, srcCol, dstCol), k, p)
     }
-    hyperBallCanonical(canonicalUndirected(edges, srcCol, dstCol), k, p,
-      maxKernelEdges = 0)
+  }
+
+  /** HyperBall's parameter contract, checked before any probe so
+    * every route rejects the same inputs ([[Sketches.hllRegister]]
+    * holds the declarative route to the same `p` range). */
+  private def requireBall(k: Int, p: Int): Unit = {
+    require(k >= 1, "k must be >= 1")
+    require(p >= 4 && p <= 16, "p must be in [4, 16]")
   }
 
   /** Kernel bound for [[hyperBall]]: tighter than the triangle/LPA
@@ -714,27 +611,19 @@ object Graph {
   /** The edge bound alone does not cap the register MATRIX for large
     * `p` (n·2^p at p=16 overflows an Int index well below the edge
     * bound): admit the kernel only when the worst-case matrix
-    * (2·edges node bound × 2^p bytes) stays ≤ 256 MB — at p=6 this
-    * is looser than [[HyperBallKernelBound]], at p=16 it correctly
-    * shrinks the kernel to toy graphs and routes the rest to the
-    * declarative evolution. */
-  private def hyperBallKernelFits(edgeRows: Int, p: Int): Boolean =
-    2L * edgeRows.toLong * (1L << p) <= (1L << 28)
+    * (2·edges node bound × 2^p bytes, over the deduped edges) stays
+    * ≤ 256 MB — at p=6 this is looser than [[HyperBallKernelBound]],
+    * at p=16 it correctly shrinks the kernel to toy graphs and routes
+    * the rest to the declarative evolution. */
+  private def hyperBallKernelFits(edges: Int, p: Int): Boolean =
+    2L * edges.toLong * (1L << p) <= (1L << 28)
 
-  /** [[hyperBall]] over an already-canonical, already-materialized
-    * `(u, v)` edge frame (see [[canonicalUndirected]]) — the entry
-    * point [[kHopReachAuto]] routes to. Routes to the register
-    * kernel below `maxKernelEdges` (pass 0 to force the declarative
-    * evolution; the frame is materialized, so the bounded
-    * limit-collect reads it back deterministically). */
-  private[graft] def hyperBallCanonical(ue: DataFrame, k: Int, p: Int = 6,
-                                        maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    if (maxKernelEdges > 0) {
-      val probed = ue.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))
-        return hyperBallKernel(ue.sparkSession, probed, k, p)
-    }
+  /** The declarative [[hyperBall]] evolution over an already-canonical,
+    * already-materialized `(u, v)` edge frame (see
+    * [[canonicalUndirected]]) — the branch both [[hyperBall]] and
+    * [[kHopReachAuto]] route to when the kernel does not admit. */
+  private def hyperBallCanonical(ue: DataFrame, k: Int, p: Int): DataFrame = {
+    requireBall(k, p)
     val m = 1 << p
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
@@ -831,12 +720,11 @@ object Graph {
     * broadcast + range flatMap convention, never a driver-built
     * frame. */
   private def hyperBallKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              k: Int, p: Int): DataFrame = {
+                              g: DriverFold.Dense, k: Int, p: Int): DataFrame = {
     import spark.implicits._
     val m = 1 << p
     val low = 60 - p
-    val (nodes, eu, ev) = densePairs(rows)
+    val DriverFold.Dense(nodes, eu, ev) = g
     val n = nodes.length
     val mm = eu.length
     var cur = new Array[Byte](n * m)
@@ -911,24 +799,15 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(rounds >= 0, "rounds must be nonnegative")
-    val pairs = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    // Size-routed strategy (r18, the q105 kernel convention): up to
-    // `maxKernelEdges` canonical edges the synchronous rounds run as
-    // one broadcast-CSR kernel — each declarative round is a
-    // join + two aggregates + a checkpoint, and at sub-second scale
-    // those per-round jobs ARE the cost. Above the bound, the
-    // declarative rounds below run unchanged at any scale. Probe and
-    // collect are ONE bounded `limit(n+1).collect()` execution (r19,
-    // r18 advisor — see [[triangleCount]]): at most maxKernelEdges+1
-    // rows ever reach the driver regardless of source determinism,
-    // and the scan short-circuits once the bound is exceeded; the
-    // kernel dedups exactly in dense-id space ([[densePairs]]).
-    val probed = pairs.limit(maxKernelEdges + 1).collect()
-    if (probed.length <= maxKernelEdges)
-      return labelPropKernel(edges.sparkSession, probed, rounds)
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
+    // Size-routed strategy (r18, the q105 kernel convention, through
+    // [[DriverFold]]): up to `maxKernelEdges` RAW canonical pairs the
+    // synchronous rounds run as one broadcast-CSR kernel — each
+    // declarative round is a join + two aggregates + a checkpoint, and
+    // at sub-second scale those per-round jobs ARE the cost. Above the
+    // bound, the declarative rounds below run unchanged at any scale.
+    val folded = DriverFold.edges(pairs, maxKernelEdges, dropDup = true)
+    if (folded.isDefined) return labelPropKernel(edges.sparkSession, folded.get, rounds)
     val ue = pairs.distinct().localCheckpoint(true)
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
@@ -954,32 +833,13 @@ object Graph {
     * are always node ids, so counting uses a dense scratch array
     * with a stamp trick (O(deg) per node, no per-node allocation).
     * Rounds are O(m) each on the guard-bounded graph (the
-    * fitCorpusTriage driver-fold convention); the result emits
-    * distributed via broadcast, never as a driver-built frame. */
+    * fitCorpusTriage driver-fold convention); the result emits via
+    * [[DriverFold.perNode]]. */
   private def labelPropKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              rounds: Int): DataFrame = {
-    import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
+                              g: DriverFold.Dense, rounds: Int): DataFrame = {
+    val nodes = g.nodes
     val n = nodes.length
-    val m = eu.length
-    val deg = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-    }
-    val ptr = new Array[Int](n + 1)
-    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
-    val adj = new Array[Int](2 * m)
-    locally {
-      val fill = java.util.Arrays.copyOf(ptr, n)
-      var i = 0
-      while (i < m) {
-        adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
-        adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
-        i += 1
-      }
-    }
+    val (ptr, adj) = symmetricCsr(g)
     // lab holds DENSE label indices (labels are always node ids).
     var lab = Array.tabulate(n)(identity)
     val cnt = new Array[Int](n)
@@ -1012,12 +872,7 @@ object Graph {
       lab = next
       r += 1
     }
-    val labIds = Array.tabulate(n)(i => nodes(lab(i)))
-    val bc = spark.sparkContext.broadcast((nodes, labIds))
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, bl) = bc.value
-      (bn(i.toInt), bl(i.toInt))
-    }.toDF("node", "label")
+    DriverFold.perNode(spark, "node" -> nodes, "label" -> lab.map(l => nodes(l)))
   }
 
   /** Link prediction by neighborhood overlap: for every NON-adjacent
@@ -1044,12 +899,7 @@ object Graph {
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
                      maxDegree: Long = Long.MaxValue): DataFrame = {
     require(maxDegree > 0, "maxDegree must be positive")
-    val ue = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    val ue = canonicalUndirected(edges, srcCol, dstCol)
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -1093,12 +943,7 @@ object Graph {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  maxDegree: Long = Long.MaxValue): DataFrame = {
     require(maxDegree > 0, "maxDegree must be positive")
-    val ue = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    val ue = canonicalUndirected(edges, srcCol, dstCol)
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -1151,28 +996,19 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            rounds: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW directed pairs the integer recurrence
-    // runs as one driver-fold kernel (two long arrays, O(m) per
-    // round — exact, since unnormalized HITS is pure long addition).
-    // Probe and collect are one bounded `limit(n+1).collect()`
-    // execution; [[densePairs]] dedups the directed pairs exactly
-    // (it encodes (col0, col1) as given — canonicalization is the
-    // CALLER's projection, absent here). Above the bound the
-    // declarative per-round join/agg plan runs unchanged.
-    if (maxKernelEdges > 0) {
-      val rawPairs = edges
-        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val probed = rawPairs.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges)
-        return hitsKernel(edges.sparkSession, probed, rounds)
-    }
-    val e = edges
+    val pairs = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+    // Size-routed (r19, the q105/q118 convention, through
+    // [[DriverFold]]): up to `maxKernelEdges` RAW directed pairs the
+    // integer recurrence runs as one driver-fold kernel (two long
+    // arrays, O(m) per round — exact, since unnormalized HITS is pure
+    // long addition); the dense index dedups the DIRECTED pairs as
+    // given. Above the bound the declarative per-round join/agg plan
+    // runs unchanged.
+    val folded = DriverFold.edges(pairs, maxKernelEdges, dropDup = true)
+    if (folded.isDefined) return hitsKernel(edges.sparkSession, folded.get, rounds)
+    val e = pairs.distinct().localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -1201,12 +1037,10 @@ object Graph {
     * from h₀ = 1 over the deduped directed edge set, unnormalized
     * long arithmetic (associative/commutative, so the fold order
     * cannot change the result). O(m) per round on two long arrays;
-    * emit via broadcast + range map, never a driver-built frame. */
+    * emit via [[DriverFold.perNode]]. */
   private def hitsKernel(spark: org.apache.spark.sql.SparkSession,
-                         rows: Array[org.apache.spark.sql.Row],
-                         rounds: Int): DataFrame = {
-    import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
+                         g: DriverFold.Dense, rounds: Int): DataFrame = {
+    val DriverFold.Dense(nodes, eu, ev) = g
     val n = nodes.length
     val m = eu.length
     var hub = Array.fill(n)(1L)
@@ -1225,13 +1059,38 @@ object Graph {
       }
       r += 1
     }
-    val bc = spark.sparkContext.broadcast((nodes, hub, auth))
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, bh, ba) = bc.value
-      (bn(i.toInt), bh(i.toInt), ba(i.toInt))
-    }.toDF("node", "hub", "auth")
+    DriverFold.perNode(spark, "node" -> nodes, "hub" -> hub, "auth" -> auth)
   }
 
+  /** Fixed-point PageRank over an edge list, in scaled INTEGER
+    * arithmetic: ranks are maintained as `rank * scale` longs and
+    * every per-edge contribution is the floor division
+    * `(dampNum * r(u)) div (dampDen * outdeg(u))`, so each
+    * iteration is exact integer arithmetic end-to-end — sums are
+    * order-independent, results are identical on any engine that
+    * replays the recurrence (q60's DuckDB oracle unrolls it in
+    * SQL), and no float summation ever enters the loop. The
+    * float-rank formulation would tie the result to Spark's
+    * nondeterministic aggregation order; the classic
+    * fixed-point-arithmetic trade accepts ~1/scale rounding per
+    * edge for bit-reproducibility.
+    *
+    * Semantics: nodes = distinct endpoints; initial rank
+    * `scale div N`; per iteration
+    * `r'(v) = base + sum over in-edges of contrib(u, v)` with
+    * `base = ((dampDen - dampNum) * scale) div (dampDen * N)`.
+    * Dangling nodes (no out-edges) leak their damped mass — the
+    * simple-variant convention, documented rather than
+    * redistributed; ranks are relative ordering scores, not a
+    * probability simplex.
+    *
+    * Scale shape: the out-degree join is precomputed once onto the
+    * edge list (static across iterations); each iteration is one
+    * equi-join of the rank table onto that edge list (shuffle on
+    * src) plus one map-side-combinable aggregation (shuffle on dst)
+    * — the canonical distributed PageRank step. Rank state is
+    * localCheckpoint'd per round: without the cut the logical plan
+    * doubles every iteration (the q47 lesson). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
                scale: Long = 1000000000000L,
@@ -1241,23 +1100,18 @@ object Graph {
     require(scale > 0, "scale must be positive")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW edge rows the scaled-integer recurrence
-    // runs as one driver-fold kernel — exact, because every step is
-    // long `div`/`+` whose fold order cannot change the result.
-    // Probe and collect are one bounded `limit(n+1).collect()`
-    // execution. The kernel keeps multi-edges and self-loops
-    // ([[denseDirectedKeepDup]]) — out-degree and contribution are
-    // per-ROW in this operator — and declines rows with null
-    // endpoints (no projection filters them here), routing those to
-    // the declarative plan whose join semantics define them.
-    if (maxKernelEdges > 0) {
-      val probed = e.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges &&
-          !probed.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return pageRankKernel(edges.sparkSession, probed, iters,
-          dampNum, dampDen, scale)
-    }
+    // Size-routed (r19, the q105/q118 convention, through
+    // [[DriverFold]]): up to `maxKernelEdges` RAW edge rows the
+    // scaled-integer recurrence runs as one driver-fold kernel —
+    // exact, because every step is long `div`/`+` whose fold order
+    // cannot change the result. The kernel keeps multi-edges and
+    // self-loops (out-degree and contribution are per-ROW in this
+    // operator); no projection filters null endpoints here, so the
+    // probe declines them to the declarative plan, whose join
+    // semantics define them.
+    val folded = DriverFold.edges(e, maxKernelEdges, dropDup = false)
+    if (folded.isDefined)
+      return pageRankKernel(edges.sparkSession, folded.get, iters, dampNum, dampDen, scale)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -1293,50 +1147,21 @@ object Graph {
     ranks
   }
 
-  /** Dense-id mapping of RAW directed `(a, b)` rows WITHOUT dedup —
-    * [[densePairs]]' sibling for operators whose semantics count
-    * multi-edges and self-loops ([[pageRank]]'s out-degree and
-    * per-edge contribution are per-ROW). Callers must have screened
-    * null endpoints. */
-  private def denseDirectedKeepDup(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Long], Array[Int], Array[Int]) = {
-    val nodeSet = new java.util.TreeSet[java.lang.Long]()
-    rows.foreach { r => nodeSet.add(r.getLong(0)); nodeSet.add(r.getLong(1)) }
-    val nodes = new Array[Long](nodeSet.size())
-    locally {
-      var i = 0; val it = nodeSet.iterator()
-      while (it.hasNext) { nodes(i) = it.next(); i += 1 }
-    }
-    def dense(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val eu = new Array[Int](rows.length)
-    val ev = new Array[Int](rows.length)
-    locally {
-      var i = 0
-      while (i < rows.length) {
-        eu(i) = dense(rows(i).getLong(0)); ev(i) = dense(rows(i).getLong(1))
-        i += 1
-      }
-    }
-    (nodes, eu, ev)
-  }
-
   /** Driver-fold PageRank kernel: EXACTLY the declarative scaled-
     * integer recurrence — init `scale div n`, per iteration
     * `r'(v) = base + Σ (dampNum·r(u)) div (dampDen·outdeg(u))` over
     * RAW edge rows (multi-edges and self-loops counted, dangling
     * nodes leak mass — the declarative semantics verbatim; all
     * operands are nonnegative, so Scala's truncating `/` IS SQL
-    * `div`). O(m) per iteration on long arrays; emit via broadcast +
-    * range map. */
+    * `div`). O(m) per iteration on long arrays; emit via
+    * [[DriverFold.perNode]]. */
   private def pageRankKernel(spark: org.apache.spark.sql.SparkSession,
-                             rows: Array[org.apache.spark.sql.Row],
-                             iters: Int, dampNum: Long, dampDen: Long,
-                             scale: Long): DataFrame = {
-    import spark.implicits._
-    if (rows.isEmpty)
-      return spark.emptyDataset[(Long, Long)].toDF("node", "rank_scaled")
-    val (nodes, eu, ev) = denseDirectedKeepDup(rows)
+                             g: DriverFold.Dense, iters: Int, dampNum: Long,
+                             dampDen: Long, scale: Long): DataFrame = {
+    val DriverFold.Dense(nodes, eu, ev) = g
     val n = nodes.length
+    // An empty graph has no ranks (and no N to divide by).
+    if (n == 0) return DriverFold.perNode(spark, "node" -> nodes, "rank_scaled" -> Array.emptyLongArray)
     val m = eu.length
     val outdeg = new Array[Long](n)
     locally {
@@ -1358,11 +1183,7 @@ object Graph {
       ranks = s
       it += 1
     }
-    val bc = spark.sparkContext.broadcast((nodes, ranks))
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, br) = bc.value
-      (bn(i.toInt), br(i.toInt))
-    }.toDF("node", "rank_scaled")
+    DriverFold.perNode(spark, "node" -> nodes, "rank_scaled" -> ranks)
   }
 
   /** Personalized PageRank / TrustRank (Gyöngyi et al.): the
@@ -1393,23 +1214,20 @@ object Graph {
     require(scale > 0, "scale must be positive")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    // Size-routed like [[pageRank]] (r19): bounded limit-collect of
-    // BOTH the raw edge rows and the distinct seed set (each under
-    // the same bound), null endpoints/seed rows decline to the
-    // declarative plan (a null seed matches no node there — the
-    // kernel drops them for the same effect). The seed-exists guard
-    // is enforced identically on both routes.
-    if (maxKernelEdges > 0) {
-      val probed = e.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges &&
-          !probed.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val seedRows = seeds.select(col(seedCol).cast("long").as("node"))
-          .distinct().limit(maxKernelEdges + 1).collect()
-        if (seedRows.length <= maxKernelEdges)
-          return personalizedPageRankKernel(edges.sparkSession, probed,
-            seedRows.filter(!_.isNullAt(0)).map(_.getLong(0)),
-            iters, dampNum, dampDen, scale)
-      }
+    // Size-routed like [[pageRank]] (r19, through [[DriverFold]]):
+    // the raw edge rows and the RAW seed column are each collected
+    // under the same bound, and null edge endpoints or seeds decline
+    // to the declarative plan. Seeds are deduped on the driver; raw
+    // seeds over the bound route to the declarative plan, as
+    // conservative as the edge bound. The seed-exists guard is
+    // enforced identically on both routes.
+    val folded = DriverFold.edges(e, maxKernelEdges, dropDup = false)
+    if (folded.isDefined) {
+      val seedIds = DriverFold.collect(
+        seeds.select(col(seedCol).cast("long")), maxKernelEdges)
+      if (seedIds.isDefined)
+        return personalizedPageRankKernel(edges.sparkSession, folded.get,
+          seedIds.get(0), iters, dampNum, dampDen, scale)
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -1449,14 +1267,10 @@ object Graph {
     * + Σ (dampNum·t(u)) div (dampDen·outdeg(u))` — exactly the
     * declarative semantics, including the seed-must-exist guard. */
   private def personalizedPageRankKernel(spark: org.apache.spark.sql.SparkSession,
-                                         rows: Array[org.apache.spark.sql.Row],
-                                         seedIds: Array[Long], iters: Int,
-                                         dampNum: Long, dampDen: Long,
+                                         g: DriverFold.Dense, seedIds: Array[Long],
+                                         iters: Int, dampNum: Long, dampDen: Long,
                                          scale: Long): DataFrame = {
-    import spark.implicits._
-    val (nodes, eu, ev) =
-      if (rows.isEmpty) (new Array[Long](0), new Array[Int](0), new Array[Int](0))
-      else denseDirectedKeepDup(rows)
+    val DriverFold.Dense(nodes, eu, ev) = g
     val n = nodes.length
     val m = eu.length
     val isSeed = new Array[Boolean](n)
@@ -1490,10 +1304,6 @@ object Graph {
       trust = s
       it += 1
     }
-    val bc = spark.sparkContext.broadcast((nodes, trust))
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, bt) = bc.value
-      (bn(i.toInt), bt(i.toInt))
-    }.toDF("node", "trust_scaled")
+    DriverFold.perNode(spark, "node" -> nodes, "trust_scaled" -> trust)
   }
 }

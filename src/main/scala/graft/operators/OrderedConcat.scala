@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * by their numeric sequence (natural order — part_10 after part_9)
   * and concatenated in that order, with the group's part count.
   *
-  * Plan shape (r15, measured in Q38Sweep at sf0.1): ONE range
-  * exchange + partition-local (key, seq, fname) sort + a streaming
+  * Plan shape (r15, measured at sf0.1 — BASELINE.md's q38 entry):
+  * ONE range exchange + partition-local (key, seq, fname) sort + a streaming
   * mapPartitions group-assemble. RangePartitioning on the key means
   * the in-partition sort doubles as both group clustering AND the
   * global output order — no second exchange; groups assemble in a
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * second exchange plus per-group array materialization and measured
   * 2.26× DuckDB. mapPartitions is justified per the SURVEY
   * preference order: the composition-of-builtins plans were measured
-  * slower (Q38Sweep `cur`/`stragg`/`rangeagg` variants). At 1000
+  * slower (BASELINE.md's q38 entry times all four shapes). At 1000
   * executors this is the shape of a sort-merge aggregation: one wide
   * exchange of narrow rows, then linear per-partition work.
   *

@@ -19,9 +19,9 @@ object AssetQueries {
     // process_all.py:409-438,566-617): per order, part filenames are
     // sorted by the trailing sequence number extracted from the name
     // (NOT lexicographically — part_10 must follow part_9) and
-    // concatenated in that order. Shape (r15, Q38Sweep measured at
-    // sf0.1): ONE range exchange + partition-local sort + a streaming
-    // mapPartitions group-assemble. The previous hash-aggregate
+    // concatenated in that order. Shape (r15, measured at sf0.1 —
+    // BASELINE.md's q38 entry): ONE range exchange + partition-local
+    // sort + a streaming mapPartitions group-assemble. The previous hash-aggregate
     // (collect_list(struct) → array_sort → transform → array_join →
     // orderBy) paid a second exchange for the global order plus
     // per-group array materialization and measured 1.17-1.27 s min
@@ -34,7 +34,7 @@ object AssetQueries {
     // StringBuilder, never an array. Measured 0.83-0.90 s min — 1.5x
     // DuckDB's 0.56 s. mapPartitions is justified here per the
     // SURVEY preference order: the composition-of-builtins plan was
-    // measured slower (Q38Sweep `cur`/`stragg`/`rangeagg` variants),
+    // measured slower (BASELINE.md's q38 entry times all four shapes),
     // and the F10 sentence-grouping precedent applies (ordered
     // stateful scan). At 1000 executors this is the same shape as a
     // sort-merge aggregation: one wide exchange of narrow rows, then
@@ -63,7 +63,9 @@ object AssetQueries {
         .select(col("l_orderkey"), fname.as("fname"))
         .withColumn("seq", seq)
       // Assembly extracted to the shared operator (r17) so the
-      // FloorSweeps replica harness exercises the exact gated plan.
+      // replica sweeps (plans/r18/evidence/floor_sweeps_*.json,
+      // plans/r19/evidence/floor_sweeps_final*.json) timed the exact
+      // gated plan.
       graft.operators.OrderedConcat.assemble(rows)
     },
 

@@ -138,7 +138,8 @@ class GraphSpec extends SparkSuite {
     } yield es
     def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
-    for (edges <- PropSampling.sample(edgeGen, n = 4) if edges.nonEmpty) {
+    // The empty edge frame rides along as one more input on every route.
+    for (edges <- PropSampling.sample(edgeGen, n = 4).filter(_.nonEmpty) :+ Seq.empty) {
       val df = edges.toDF("src", "dst")
       assert(rows(Graph.kHopReach(df, "src", "dst", k = 2)) ===
         rows(Graph.kHopReach(df, "src", "dst", k = 2, maxKernelEdges = 0)),
@@ -149,8 +150,11 @@ class GraphSpec extends SparkSuite {
       assert(rows(Graph.hits(df, "src", "dst", rounds = 2)) ===
         rows(Graph.hits(df, "src", "dst", rounds = 2, maxKernelEdges = 0)),
         s"hits route divergence on $edges")
+      assert(rows(Graph.labelPropagation(df, "src", "dst", rounds = 2)) ===
+        rows(Graph.labelPropagation(df, "src", "dst", rounds = 2, maxKernelEdges = 0)),
+        s"labelPropagation route divergence on $edges")
     }
-    for (edges <- PropSampling.sample(rawGen, n = 4) if edges.nonEmpty) {
+    for (edges <- PropSampling.sample(rawGen, n = 4).filter(_.nonEmpty) :+ Seq.empty) {
       val df = edges.toDF("src", "dst")
       assert(rows(Graph.pageRank(df, "src", "dst", iters = 3)) ===
         rows(Graph.pageRank(df, "src", "dst", iters = 3, maxKernelEdges = 0)),
@@ -164,6 +168,96 @@ class GraphSpec extends SparkSuite {
             maxKernelEdges = 0)),
           s"PPR route divergence on $edges seeds=$seeds")
       }
+    }
+  }
+
+  test("both routes reject the same inputs and agree on empty and null-endpoint frames") {
+    // Every routed operator runs twice per input — at its default
+    // bound (the driver-fold kernel admits these toy graphs) and with
+    // the kernel disabled — and both runs must end the same way: the
+    // same rows, or an exception of the same class.
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def outcome(run: => DataFrame): Either[Class[_], Set[Seq[Any]]] =
+      try Right(run.collect().map(_.toSeq).toSet)
+      catch { case e: Exception => Left(e.getClass) }
+    def same(what: String)(viaDefault: => DataFrame,
+                           viaDeclarative: => DataFrame): Either[Class[_], Set[Seq[Any]]] = {
+      val (a, b) = (outcome(viaDefault), outcome(viaDeclarative))
+      assert(a === b, s"$what: default bound gave $a, kernel disabled gave $b")
+      a
+    }
+    def rejects(what: String)(viaDefault: => DataFrame, viaDeclarative: => DataFrame): Unit =
+      assert(same(what)(viaDefault, viaDeclarative).isLeft, s"$what: accepted, expected a rejection")
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
+    val off = 0
+    // kHopReachAuto's exact route is declarative above the 4M-edge kernel bound.
+    val exactDeclarative = 5000000L
+    for (p <- Seq(2, 20)) {
+      rejects(s"hyperBall p=$p")(Graph.hyperBall(g, "src", "dst", k = 2, p = p),
+        Graph.hyperBall(g, "src", "dst", k = 2, p = p, maxKernelEdges = off))
+      rejects(s"kHopReachAuto p=$p")(Graph.kHopReachAuto(g, "src", "dst", k = 2, p = p),
+        Graph.kHopReachAuto(g, "src", "dst", k = 2, p = p, maxExactEdges = exactDeclarative))
+    }
+    rejects("hyperBall k=0")(Graph.hyperBall(g, "src", "dst", k = 0),
+      Graph.hyperBall(g, "src", "dst", k = 0, maxKernelEdges = off))
+    rejects("kHopReach k=0")(Graph.kHopReach(g, "src", "dst", k = 0),
+      Graph.kHopReach(g, "src", "dst", k = 0, maxKernelEdges = off))
+    rejects("kHopReachAuto k=0")(Graph.kHopReachAuto(g, "src", "dst", k = 0),
+      Graph.kHopReachAuto(g, "src", "dst", k = 0, maxExactEdges = exactDeclarative))
+    rejects("labelPropagation rounds=-1")(Graph.labelPropagation(g, "src", "dst", -1),
+      Graph.labelPropagation(g, "src", "dst", -1, maxKernelEdges = off))
+    for (r <- Seq(0, -1))
+      rejects(s"hits rounds=$r")(Graph.hits(g, "src", "dst", r),
+        Graph.hits(g, "src", "dst", r, maxKernelEdges = off))
+    rejects("pageRank iters=-1")(Graph.pageRank(g, "src", "dst", -1),
+      Graph.pageRank(g, "src", "dst", -1, maxKernelEdges = off))
+    val seeds = Seq(1L).toDF("node")
+    rejects("PPR iters=-1")(Graph.personalizedPageRank(g, "src", "dst", seeds, "node", -1),
+      Graph.personalizedPageRank(g, "src", "dst", seeds, "node", -1, maxKernelEdges = off))
+    for (d <- Seq(-1L, 101L)) {
+      rejects(s"pageRank dampNum=$d")(Graph.pageRank(g, "src", "dst", 2, dampNum = d),
+        Graph.pageRank(g, "src", "dst", 2, dampNum = d, maxKernelEdges = off))
+      rejects(s"PPR dampNum=$d")(
+        Graph.personalizedPageRank(g, "src", "dst", seeds, "node", 2, dampNum = d),
+        Graph.personalizedPageRank(g, "src", "dst", seeds, "node", 2, dampNum = d,
+          maxKernelEdges = off))
+    }
+    val absent = Seq(777L).toDF("node")
+    rejects("PPR without a seed in the graph")(
+      Graph.personalizedPageRank(g, "src", "dst", absent, "node", 2),
+      Graph.personalizedPageRank(g, "src", "dst", absent, "node", 2, maxKernelEdges = off))
+    rejects("connectedComponents maxIterations=0")(
+      Dedup.connectedComponents(g, "src", "dst", maxIterations = 0),
+      Dedup.connectedComponents(g, "src", "dst", maxIterations = 0, maxKernelEdges = off))
+
+    // Empty frames, and rows with a null endpoint (which the
+    // canonical projections drop and the pageRank / PPR / CC kernels
+    // decline), on every routed operator.
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
+      (Some(3L), Some(1L)), (None, None)).toDF("src", "dst")
+    val nullSeeds = Seq[Option[Long]](Some(1L), None).toDF("node")
+    for ((name, e) <- Seq("empty" -> empty, "null-endpoint" -> nulls)) {
+      same(s"triangleCount $name")(Graph.triangleCount(e, "src", "dst"),
+        Graph.triangleCount(e, "src", "dst", maxKernelEdges = off))
+      same(s"labelPropagation $name")(Graph.labelPropagation(e, "src", "dst", 2),
+        Graph.labelPropagation(e, "src", "dst", 2, maxKernelEdges = off))
+      same(s"kHopReach $name")(Graph.kHopReach(e, "src", "dst", 2),
+        Graph.kHopReach(e, "src", "dst", 2, maxKernelEdges = off))
+      same(s"hyperBall $name")(Graph.hyperBall(e, "src", "dst", 2),
+        Graph.hyperBall(e, "src", "dst", 2, maxKernelEdges = off))
+      same(s"kHopReachAuto $name")(Graph.kHopReachAuto(e, "src", "dst", 2),
+        Graph.kHopReachAuto(e, "src", "dst", 2, maxExactEdges = exactDeclarative))
+      same(s"hits $name")(Graph.hits(e, "src", "dst", 2),
+        Graph.hits(e, "src", "dst", 2, maxKernelEdges = off))
+      same(s"pageRank $name")(Graph.pageRank(e, "src", "dst", 3),
+        Graph.pageRank(e, "src", "dst", 3, maxKernelEdges = off))
+      for (s <- Seq(seeds, nullSeeds))
+        same(s"PPR $name")(Graph.personalizedPageRank(e, "src", "dst", s, "node", 3),
+          Graph.personalizedPageRank(e, "src", "dst", s, "node", 3, maxKernelEdges = off))
+      same(s"connectedComponents $name")(Dedup.connectedComponents(e, "src", "dst"),
+        Dedup.connectedComponents(e, "src", "dst", maxKernelEdges = off))
     }
   }
 
